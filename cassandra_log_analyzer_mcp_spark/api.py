@@ -11,28 +11,48 @@ nodes register log *paths* (local/HDFS/S3 globs or pasted content
 landed to disk), and analysis reads them through the distributed
 sources. That is the design change that takes the tool surface from
 one-machine-RAM to 100 TB.
+
+Content-version contract: a store resolves its data once per *content
+version*, the (path, length, mtime) of every file its globs match.
+Within one version every tool call reads the same cached flagged frame;
+any paste, append, new or removed file is a new version, and the next
+call reads it.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.parsing import parse_lines, with_issue_flags
 from .operators import analysis
-from .sources.logfiles import read_log_dir
+from .sources.logfiles import NODE_REGEX, check_node_name, read_log_dir
 
 
 class LogStore:
-    """Registered log locations, one or more per node."""
+    """Registered log locations, one or more per node.
+
+    The store's content version is the sorted (uri, length, mtime) of
+    every file its globs match, listed with one Hadoop ``globStatus``
+    per glob (the listing ``spark.read.text`` does, so every scheme
+    ``read_log_dir`` accepts works). ``flagged()`` returns the same
+    cached DataFrame while the version is unchanged, re-caches it if
+    its cache entry was dropped (``clear_caches``), and on a new version
+    unpersists the old frame before building the new one, so a store
+    holds at most one cache entry and never serves pre-append content.
+    """
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._globs: list[str] = []
         self._paste_dir: str | None = None
+        self._version: tuple | None = None
+        self._flagged: DataFrame | None = None
 
     def add_glob(self, path_glob: str) -> None:
         """Register a directory glob whose paths encode the node name
@@ -42,6 +62,7 @@ class LogStore:
     def add_pasted(self, node_name: str, content: str) -> None:
         """Parity with the reference's manual load_logs tool (ref
         :724-736): land pasted content to a local staging dir."""
+        check_node_name(node_name)
         if self._paste_dir is None:
             self._paste_dir = tempfile.mkdtemp(prefix="logstore_")
             self._globs.append(f"{self._paste_dir}/*/*.log")
@@ -49,6 +70,30 @@ class LogStore:
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "pasted.log"), "a") as fh:
             fh.write(content if content.endswith("\n") else content + "\n")
+
+    def _files(self) -> tuple[tuple[str, int, int], ...]:
+        """The content version: (uri, length, mtime ms) of every file the
+        globs match, sorted. A matched directory contributes its
+        non-hidden files, as Spark's listing of it does."""
+        if not self._globs:
+            raise ValueError("no logs loaded — register a glob or paste content")
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        out = []
+        for g in self._globs:
+            path = jvm.org.apache.hadoop.fs.Path(g)
+            fs = path.getFileSystem(conf)
+            for st in fs.globStatus(path) or []:
+                if not st.isDirectory():
+                    out.append(_file_version(st))
+                    continue
+                root = st.getPath().toUri().toString()
+                it = fs.listFiles(st.getPath(), True)
+                while it.hasNext():
+                    f = _file_version(it.next())
+                    if not re.search(r"/[._]", f[0][len(root):]):
+                        out.append(f)
+        return tuple(sorted(out))
 
     def lines(self) -> DataFrame:
         if not self._globs:
@@ -60,12 +105,31 @@ class LogStore:
         return out
 
     def flagged(self) -> DataFrame:
-        return with_issue_flags(parse_lines(self.lines())).cache()
+        """Parsed, issue-flagged lines of the current content version,
+        cached (see the class docstring for the contract)."""
+        version = self._files()
+        if version != self._version:
+            if self._flagged is not None:
+                self._flagged.unpersist()
+            self._flagged = with_issue_flags(parse_lines(self.lines()))
+            self._version = version
+        if not self._flagged._jdf.storageLevel().isValid():
+            self._flagged.cache()
+        return self._flagged
 
     def nodes(self) -> list[str]:
-        return [
-            r.node for r in self.lines().select("node").distinct().collect()
-        ]
+        """Sorted names of the nodes with at least one line, read off the
+        file listing (no Spark job), with ``read_log_dir``'s node regex."""
+        rx = re.compile(NODE_REGEX)
+        return sorted({
+            m.group(1) if (m := rx.search(uri)) else ""
+            for uri, length, _ in self._files() if length
+        })
+
+
+def _file_version(st) -> tuple[str, int, int]:
+    return (st.getPath().toUri().toString(), st.getLen(),
+            st.getModificationTime())
 
 
 def analyze_cluster_report(flagged: DataFrame) -> str:
@@ -94,16 +158,28 @@ def analyze_cluster_report(flagged: DataFrame) -> str:
 
 def search_report(flagged: DataFrame, pattern: str, case_sensitive: bool = False,
                   node_filter: str | None = None, limit: int = 100) -> str:
-    """Markdown parity with search_logs (ref :773-799)."""
+    """Markdown parity with search_logs (ref :773-799).
+
+    Hits are numbered by ``line_id``, the raw per-node line number
+    ``read_log_dir`` pins, as the reference's enumerate() over the file
+    does: junk and stack-trace lines before a hit count. The pattern is
+    compiled first with ``java.util.regex`` (the engine ``rlike`` runs),
+    so an invalid one raises ``ValueError`` before any job starts.
+    """
+    pat = pattern if case_sensitive else f"(?i){pattern}"
+    try:
+        flagged.sparkSession._jvm.java.util.regex.Pattern.compile(pat)
+    except IllegalArgumentException as e:
+        raise ValueError(f"invalid search pattern {pattern!r}: {e}") from None
     df = flagged
     if node_filter:
         df = df.filter(F.col("node") == node_filter)
-    hits = analysis.search_logs(df, pattern, case_sensitive)
+    hits = df.filter(F.col("raw").rlike(pat)).select("node", "line_id", "raw")
     total = hits.count()
-    shown = hits.orderBy("node", "line_number").limit(limit).collect()
+    shown = hits.orderBy("node", "line_id").limit(limit).collect()
     out = [f"# Search results: '{pattern}'", "", f"Total: {total}", ""]
     for r in shown:
-        out += [f"**{r.node}** (line {r.line_number})", "```", r.content, "```", ""]
+        out += [f"**{r.node}** (line {r.line_id})", "```", r.raw, "```", ""]
     if total > limit:
         out.append(f"... and {total - limit} more results")
     return "\n".join(out)

@@ -23,8 +23,12 @@ the boundary, not the volume.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -33,9 +37,11 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     ``rows`` is a sequence of position-matched tuples (the same
     contract as createDataFrame with a DDL string); the result is a
     ``LocalTableScan`` — no PythonRDD, no pickled rows, no Python
-    worker at execution or broadcast time. Falls back to the classic
-    path if Arrow conversion rejects a value (type fidelity beats
-    speed: the fallback is correct, just slower).
+    worker at execution or broadcast time. A batch Arrow rejects (see
+    ``_arrow_column``) falls back, with a logged warning, to the classic
+    path, which verifies every value against the schema: type fidelity
+    beats speed, so the fallback is correct, just slower, and raises on
+    a value the schema cannot hold.
     """
     rows = [tuple(r) for r in rows]
     try:
@@ -48,11 +54,29 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
         )
         table = pa.Table.from_arrays(
             [
-                pa.array(list(col), type=field.type)
+                _arrow_column(pa, list(col), field.type)
                 for col, field in zip(cols, arrow_schema)
             ],
             schema=arrow_schema,
         )
-        return spark.createDataFrame(table)
-    except Exception:
+    # ArrowInvalid is a ValueError, ArrowTypeError a TypeError and
+    # ArrowNotImplementedError a NotImplementedError
+    except (ImportError, TypeError, ValueError, NotImplementedError) as e:
+        log.warning("local_frame(%s): Arrow path rejected the rows "
+                    "(%s: %s); using createDataFrame",
+                    schema, type(e).__name__, e)
         return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(table)
+
+
+def _arrow_column(pa, values: list, typ):
+    """One Arrow column of type ``typ``. Numbers are inferred, then cast
+    with ``safe=True``: ``pa.array(values, type=int64)`` would truncate
+    ``1.5`` to ``1`` where the safe cast raises."""
+    if not (pa.types.is_integer(typ) or pa.types.is_floating(typ)):
+        return pa.array(values, type=typ)
+    arr = pa.array(values)
+    if not (pa.types.is_integer(arr.type) or pa.types.is_floating(arr.type)
+            or pa.types.is_null(arr.type)):
+        raise TypeError(f"{arr.type} values for a {typ} column")
+    return arr.cast(typ, safe=True)

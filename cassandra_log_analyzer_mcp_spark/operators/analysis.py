@@ -249,10 +249,13 @@ def error_timeline_raw(logs: DataFrame, limit_per_node: int = 100) -> DataFrame:
 def search_logs(logs: DataFrame, pattern: str, case_sensitive: bool = False) -> DataFrame:
     """Regex search with per-node line numbers (ref :311-327).
 
-    Line numbers are assigned over ALL lines (reference enumerates the
-    file before matching) then the match filter applies. Numbering is
-    the two-stage block scheme (``_numbered_lines``) — no per-node
-    global window anywhere in the plan.
+    Line numbers count the lines of ``logs`` — for parsed logs, the
+    parsed lines, not the raw file lines — 1..n per node in ``line_id``
+    order, and are assigned before the match filter applies (the DuckDB
+    oracle pins this over the synthetic silver). Numbering is the
+    two-stage block scheme (``_numbered_lines``) — no per-node global
+    window anywhere in the plan. ``api.search_report`` numbers hits by
+    raw line instead: it shows ``line_id`` itself.
     """
     pat = pattern if case_sensitive else f"(?i){pattern}"
     return (
@@ -1114,7 +1117,7 @@ def scd_owner_join(logs: DataFrame) -> DataFrame:
         rows.append(
             (f"node{i}", mid, hi + 1, f"team{(i + 1) % SCD_TEAMS}")
         )
-    dim = local_frame(spark, 
+    dim = local_frame(spark,
         rows, "node string, valid_from long, valid_to long, owner string"
     )
     epoch = F.col("ts").cast("long")

@@ -36,9 +36,6 @@ def build_server(spark: SparkSession):
     ssh_config: dict[str, dict] = {}
     staging = tempfile.mkdtemp(prefix="ssh_logs_")
 
-    def _flagged():
-        return store.flagged()
-
     @server.list_resources()
     async def list_resources() -> list[Resource]:
         # parity with ref handle_list_resources :341-357
@@ -65,7 +62,7 @@ def build_server(spark: SparkSession):
 
         if str(uri) == "cassandra://logs/analysis":
             try:
-                return api.analyze_cluster_report(_flagged())
+                return api.analyze_cluster_report(store.flagged())
             except ValueError:
                 return _json.dumps({"error": "no logs loaded"})
         if str(uri) == "cassandra://logs/nodes":
@@ -161,11 +158,17 @@ def build_server(spark: SparkSession):
             tools = [t for t in tools if "ssh" not in t.name]
         return tools
 
+    def text(s: str) -> list[TextContent]:
+        return [TextContent(type="text", text=s)]
+
     @server.call_tool()
     async def call_tool(name: str, args: dict) -> list[TextContent]:
-        def text(s: str) -> list[TextContent]:
-            return [TextContent(type="text", text=s)]
+        try:
+            return await dispatch(name, args)
+        except ValueError as e:  # rejected input: node name, regex, empty store
+            return text(f"Error: {e}")
 
+    async def dispatch(name: str, args: dict) -> list[TextContent]:
         if name == "configure_ssh_node":
             ssh_config[args["node_name"]] = args
             return text(f"Configured SSH for '{args['node_name']}' ({args['host']})")
@@ -194,8 +197,8 @@ def build_server(spark: SparkSession):
             results = []
             for node in ssh_config:
                 try:
-                    await call_tool("load_logs_from_ssh",
-                                    {**args, "node_name": node})
+                    await dispatch("load_logs_from_ssh",
+                                   {**args, "node_name": node})
                     results.append(f"OK {node}")
                 except Exception as e:  # per-node isolation, ref :704-714
                     results.append(f"ERROR {node}: {e}")
@@ -207,20 +210,20 @@ def build_server(spark: SparkSession):
             store.add_glob(args["path_glob"])
             return text(f"Registered {args['path_glob']}")
         if name == "analyze_cluster":
-            return text(api.analyze_cluster_report(_flagged()))
+            return text(api.analyze_cluster_report(store.flagged()))
         if name == "search_logs":
             return text(api.search_report(
-                _flagged(), args["pattern"],
+                store.flagged(), args["pattern"],
                 args.get("case_sensitive", False), args.get("node_filter")))
         if name == "get_errors":
             return text(api.errors_report(
-                _flagged(), args.get("node_name"), args.get("limit", 50)))
+                store.flagged(), args.get("node_name"), args.get("limit", 50)))
         if name == "compare_nodes":
-            return text(api.compare_report(_flagged(), args.get("nodes")))
+            return text(api.compare_report(store.flagged(), args.get("nodes")))
         if name == "detect_issues":
-            return text(api.issues_report(_flagged(), args.get("severity", "all")))
+            return text(api.issues_report(store.flagged(), args.get("severity", "all")))
         if name == "cluster_health":
-            return text(api.health_report(_flagged()))
+            return text(api.health_report(store.flagged()))
         if name == "clear_caches":
             from .session import clear_caches
 

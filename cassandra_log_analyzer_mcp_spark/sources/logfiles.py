@@ -30,10 +30,31 @@ except ImportError:
     SSH_AVAILABLE = False
 
 
+#: node name = the directory holding the file (…/<node>/<file>)
+NODE_REGEX = r".*/([^/]+)/[^/]+$"
+
+
+def check_node_name(node_name: str) -> None:
+    """Raise ``ValueError`` unless ``node_name`` is safe to join into a
+    staging path as one directory.
+
+    A node name from a client becomes ``<staging>/<node>/``: a separator
+    or ``..`` would write outside the staging directory, and Spark skips
+    hidden (leading-dot) names when it lists a directory, so such a
+    node's lines could silently vanish.
+    """
+    if (not isinstance(node_name, str) or not node_name
+            or "/" in node_name or "\\" in node_name
+            or node_name.startswith(".")):
+        raise ValueError(
+            f"invalid node name {node_name!r}: must be non-empty, contain "
+            "no '/' or '\\', and not start with '.'")
+
+
 def read_log_dir(
     spark: SparkSession,
     path_glob: str,
-    node_regex: str = r".*/([^/]+)/[^/]+$",
+    node_regex: str = NODE_REGEX,
 ) -> DataFrame:
     """Read raw log lines from a glob; node extracted from the path.
 
@@ -102,6 +123,7 @@ def fetch_logs_via_ssh(
     Operational parity with ref :131-154 (tail -n N | cat). Requires
     paramiko; import-gated so the engine runs without it.
     """
+    check_node_name(node_name)
     if not SSH_AVAILABLE:
         raise RuntimeError("paramiko is not installed; SSH fetch disabled")
     import os

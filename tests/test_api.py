@@ -1,9 +1,26 @@
 """Tool-surface parity: LogStore + markdown reports."""
 
+import asyncio
+from types import SimpleNamespace
+
 import pytest
 
 from cassandra_log_analyzer_mcp_spark import api, server
+from cassandra_log_analyzer_mcp_spark.session import clear_caches
+from cassandra_log_analyzer_mcp_spark.sources import logfiles
 from cassandra_log_analyzer_mcp_spark.sources.tables import logs_flagged
+
+ERR = ("ERROR [2025-01-01 10:00:00,000] [T-1] StorageProxy:1 - "
+       "Operation timed out")
+WARN = ("WARN [2025-01-01 10:00:01,000] [T-1] GCInspector:2 - "
+        "GC pause of 900ms exceeded")
+JUNK = "not a log line"
+FRAME = "\tat org.apache.cassandra.service.StorageProxy.run(StorageProxy.java:3)"
+
+
+def _cached(spark, df) -> bool:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
 
 
 def test_logstore_pasted_roundtrip(spark):
@@ -16,6 +33,121 @@ def test_logstore_pasted_roundtrip(spark):
     flagged = store.flagged()
     assert store.nodes() == ["nodeX"]
     assert flagged.count() == 2
+
+
+def test_logstore_sees_append_to_node_already_read(spark):
+    store = api.LogStore(spark)
+    store.add_pasted("n1", ERR)
+    assert store.flagged().count() == 1
+    assert "| n1 | 1 | 0 | 1 |" in api.compare_report(store.flagged())
+    store.add_pasted("n1", WARN)
+    assert store.flagged().count() == 2
+    assert "| n1 | 2 | 1 | 2 |" in api.compare_report(store.flagged())
+
+
+def test_logstore_flagged_is_one_frame_per_version(spark):
+    store = api.LogStore(spark)
+    store.add_pasted("n1", ERR)
+    first = store.flagged()
+    assert store.flagged() is first
+    store.add_pasted("n2", WARN)
+    second = store.flagged()
+    assert second is not first
+    # the old version's entry is released, not leaked beside the new one
+    assert not _cached(spark, first)
+    assert _cached(spark, second)
+    assert second.count() == 2
+
+
+def test_logstore_recaches_after_clear_caches(spark):
+    store = api.LogStore(spark)
+    store.add_pasted("n1", ERR)
+    first = store.flagged()
+    clear_caches(spark)
+    again = store.flagged()
+    assert again is first
+    assert _cached(spark, again)
+    assert again.count() == 1
+
+
+def test_logstore_nodes_from_listing(spark):
+    with pytest.raises(ValueError, match="no logs loaded"):
+        api.LogStore(spark).nodes()
+    store = api.LogStore(spark)
+    store.add_pasted("n2", ERR)
+    store.add_pasted("n1", JUNK)  # no parsed line, still a node
+    assert sorted(store.nodes()) == ["n1", "n2"]
+
+
+def test_logstore_directory_glob_tracks_files_inside(spark, tmp_path):
+    """A glob that matches node directories: Spark lists their
+    non-hidden files, and an append to one of them is a new version."""
+    (tmp_path / "n1").mkdir()
+    log = tmp_path / "n1" / "system.log"
+    log.write_text(ERR + "\n")
+    (tmp_path / "n1" / ".system.log.crc").write_text("x\n")
+    store = api.LogStore(spark)
+    store.add_glob(f"{tmp_path}/*")
+    assert store.nodes() == ["n1"]
+    assert store.flagged().count() == 1
+    with log.open("a") as fh:
+        fh.write(WARN + "\n")
+    assert store.flagged().count() == 2
+
+
+@pytest.mark.parametrize("name", ["", "../x", "a/b", "a\\b", ".", "..",
+                                  ".hidden"])
+def test_unsafe_node_names_are_rejected(spark, tmp_path, name):
+    with pytest.raises(ValueError, match="invalid node name"):
+        api.LogStore(spark).add_pasted(name, ERR)
+    with pytest.raises(ValueError, match="invalid node name"):
+        logfiles.fetch_logs_via_ssh("h", "u", "/r/system.log",
+                                    str(tmp_path), name)
+    assert not any(tmp_path.iterdir())
+
+
+def test_search_report_numbers_hits_by_raw_line(spark):
+    store = api.LogStore(spark)
+    store.add_pasted("n1", "\n".join([WARN, JUNK, FRAME, ERR]))
+    report = api.search_report(store.flagged(), "timed out")
+    assert "Total: 1" in report
+    assert "**n1** (line 4)" in report
+
+
+def test_search_report_rejects_invalid_regex(spark):
+    store = api.LogStore(spark)
+    store.add_pasted("n1", ERR)
+    with pytest.raises(ValueError, match="Unclosed group"):
+        api.search_report(store.flagged(), "(")
+
+
+def test_call_tool_returns_rejected_input_as_text(spark, monkeypatch):
+    """The tool dispatch, with the ``mcp`` types stubbed: a rejected
+    input comes back as tool text, and the store stays usable."""
+
+    class FakeServer:
+        def __init__(self, _name):
+            self.handlers = {}
+
+        def __getattr__(self, kind):  # list_tools(), call_tool(), ...
+            return lambda: lambda fn: self.handlers.setdefault(kind, fn)
+
+    for attr, val in {"MCP_AVAILABLE": True, "Server": FakeServer,
+                      "TextContent": SimpleNamespace, "Tool": SimpleNamespace,
+                      "Resource": SimpleNamespace}.items():
+        monkeypatch.setattr(server, attr, val, raising=False)
+    call = server.build_server(spark).handlers["call_tool"]
+
+    def run(name, **args):
+        return asyncio.run(call(name, args))[0].text
+
+    assert run("load_logs", node_name="../x", log_content=ERR).startswith(
+        "Error: invalid node name")
+    assert run("load_logs", node_name="n1", log_content=ERR) == (
+        "Loaded pasted logs for 'n1'")
+    assert run("search_logs", pattern="(").startswith(
+        "Error: invalid search pattern")
+    assert "Total: 1" in run("search_logs", pattern="timed out")
 
 
 def test_analyze_cluster_report_shape(spark, sf_dir):
